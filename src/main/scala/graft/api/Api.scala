@@ -161,7 +161,7 @@ class Api(
   /** E9 adjust_by_equivalence_scale. */
   def adjustByEquivalenceScale(
       df: DataFrame, columns: Seq[String], scale: String = "Per_Capita"): DataFrame = {
-    val years = df.select(col("Year").cast("int")).distinct().collect().map(_.getInt(0)).toSeq
+    val years = repo.distinctYears(df)
     Stats.adjustByEquivalenceScale(df, repo.table("Equivalence_Scale", years), columns, scale)
   }
 
@@ -204,7 +204,7 @@ class Api(
       broadcastQuantiles: Boolean = true,
   ): DataFrame = {
     val (tableName, valueCol) = variableTables(on)
-    val years = df.select(col("Year").cast("int")).distinct().collect().map(_.getInt(0)).toSeq
+    val years = repo.distinctYears(df)
     var values = repo.table(tableName, years)
       .select(col("Year"), col("ID"), col(valueCol).as("_values"))
     values = equivalenceScale.fold(values)(scale =>

@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   *
   * The A9 result cache persists a built table as parquet keyed by a
   * dependency fingerprint (schema tree + dependency sizes), mirroring
-  * data_engine.py:515-610's size-based invalidation.
+  * data_engine.py:515-610's size-based invalidation, with a manifest of
+  * its schema and years ([[CacheManifest]]) so that a hit runs no job.
   */
 final case class RepoConfig(
     resolver: ResolverSettings = ResolverSettings(),
@@ -59,10 +60,10 @@ final case class RepoConfig(
       * per-year metadata compile + analysis chains are independent, and
       * building them sequentially makes the driver the bottleneck at
       * archive width (~0.9s/year × 39 years measured). Builds are pure
-      * plan construction (any embedded actions — distinct-years probes,
-      * A9 cache writes — are per-year and thread-safe in Spark), so
-      * concurrency changes wall-clock only, never the composed plan.
-      * 1 disables.
+      * plan construction; their only jobs are the per-year A9 cache
+      * writes, which are thread-safe in Spark and overlap when two or
+      * more years are requested. Concurrency changes wall-clock only,
+      * never the composed plan. 1 disables.
       */
     buildParallelism: Int = math.min(8, Runtime.getRuntime.availableProcessors()),
 )
@@ -111,11 +112,10 @@ class TableRepo(
   }
 
   /** Year-order-preserving, optionally parallel per-year build (see
-    * [[RepoConfig.buildParallelism]]). Small requests stay sequential —
-    * pool handoff costs more than it saves under ~4 years.
+    * [[RepoConfig.buildParallelism]]).
     */
   private def buildYears(years: Seq[Int])(build: Int => Option[DataFrame]): Seq[DataFrame] =
-    if (years.size < 4 || config.buildParallelism <= 1) years.flatMap(build(_))
+    if (years.size < 2 || config.buildParallelism <= 1) years.flatMap(build(_))
     else {
       import scala.collection.parallel.CollectionConverters._
       import scala.collection.parallel.ForkJoinTaskSupport
@@ -270,63 +270,64 @@ class TableRepo(
       config.cacheBucketKeys.forall(df.columns.contains)) config.cacheBucketKeys
     else Seq.empty
 
-  /** Existence through the Hadoop filesystem API — `cacheDir` may be
-    * HDFS/S3 at deployment scale, where a `java.io.File` probe is
-    * always false and would silently rewrite the cache on every load.
-    */
-  private def pathExists(p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   private def readCache(name: String, year: Int): Option[DataFrame] = {
     val p = cachePath(name, year)
-    if (!pathExists(p)) None
-    else if (config.cacheBucketKeys.isEmpty) Some(spark.read.parquet(p))
-    else {
-      val t = cacheTableName(name, year)
-      if (spark.catalog.tableExists(t)) Some(spark.table(t))
-      else {
-        // a previous session wrote this entry; re-attach the bucket
-        // metadata IF the files carry every key (plain-parquet fallback
-        // entries — key column absent — read as plain parquet)
-        val schema = spark.read.parquet(p).schema
-        if (config.cacheBucketKeys.forall(k => schema.fieldNames.contains(k)))
-          Some(graft.sources.RawSources.registerBucketed(
-            spark, t, p, config.cacheBucketKeys, config.cacheBucketCount))
-        else Some(spark.read.parquet(p))
-      }
-    }
+    CacheManifest.read(spark, p).map(openCache(p, name, year, _))
   }
 
   private def writeCache(df: DataFrame, name: String, year: Int): DataFrame = {
     val p = cachePath(name, year)
     val keys = bucketKeysFor(df)
-    if (keys.nonEmpty) {
+    if (keys.nonEmpty)
       graft.sources.RawSources.writeBucketed(
         df, cacheTableName(name, year), p, keys, config.cacheBucketCount)
-      spark.table(cacheTableName(name, year))
-    } else {
-      df.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
+    else df.write.mode("overwrite").parquet(p)
+    // written last: an entry without its manifest is a miss, so a write
+    // cut short is rebuilt rather than read
+    val manifest = CacheManifest(df.schema, TableRepo.provenYears(df))
+    CacheManifest.write(spark, p, manifest)
+    openCache(p, name, year, manifest)
+  }
+
+  /** Open a cache entry with the schema its manifest recorded — Spark's
+    * parquet source would otherwise run a job to infer it — and re-apply
+    * the year proof the built plan carried, so the decorators downstream
+    * of a cached table still read their years off the plan. On the
+    * entry's own data the filter removes nothing.
+    */
+  private def openCache(p: String, name: String, year: Int, m: CacheManifest): DataFrame = {
+    val keys = config.cacheBucketKeys
+    val df =
+      // bucket metadata lives in the catalog, not the files: re-attach it
+      // (a no-op when this session wrote the entry). Plain-parquet
+      // fallback entries — key column absent — read as plain parquet
+      if (keys.nonEmpty && keys.forall(m.schema.fieldNames.contains))
+        graft.sources.RawSources.registerBucketed(
+          spark, cacheTableName(name, year), p, keys, config.cacheBucketCount, Some(m.schema))
+      else spark.read.schema(m.schema).parquet(p)
+    m.years.fold(df)(ys => df.where(col("Year").isin(ys: _*)))
   }
 
   // ------------------------------------------------------------------ weights (E6)
 
-  /** Distinct years present in a table — driver-side, but bounded by the
-    * survey's ~40 years (the reference iterates the same set,
-    * data_engine.py:782-785).
+  /** The years a table holds — the set every per-year decoder, weight
+    * and scale compiles metadata for (the reference iterates the same
+    * set, data_engine.py:782-785). Read off the plan when it proves the
+    * set ([[TableRepo.provenYears]]), as the repo's tables do through
+    * `add_year`'s literal and the union of per-year builds. Only
+    * a plan that proves nothing (a locally built frame, or constraint
+    * propagation switched off) costs a distinct-years job.
     */
-  private def distinctYears(df: DataFrame, yearCol: String = "Year"): Seq[Int] = {
-    val years = df.select(col(yearCol).cast("int").as("_y")).distinct().collect()
-    // a null year (missing column null-filled by a union, or a value
-    // that failed the int cast) must be a diagnosable error, not a bare
-    // NullPointerException out of Row.getInt
-    require(years.forall(!_.isNullAt(0)),
-      s"column $yearCol contains null/non-numeric years — cannot resolve per-year metadata")
-    years.map(_.getInt(0)).toSeq.sorted
-  }
+  private[graft] def distinctYears(df: DataFrame, yearCol: String = "Year"): Seq[Int] =
+    TableRepo.provenYears(df, yearCol).getOrElse {
+      val years = df.select(col(yearCol).cast("int").as("_y")).distinct().collect()
+      // a null year (missing column null-filled by a union, or a value
+      // that failed the int cast) must be a diagnosable error, not a bare
+      // NullPointerException out of Row.getInt
+      require(years.forall(!_.isNullAt(0)),
+        s"column $yearCol contains null/non-numeric years — cannot resolve per-year metadata")
+      years.map(_.getInt(0)).toSeq.sorted
+    }
 
   /** Per-year weight table (Year, ID, Weight): external parquet for years
     * <= externalWeightsYearMax, household_information.Weight after
@@ -418,4 +419,134 @@ class TableRepo(
   }
 
   override def broadcastable(name: String): Boolean = !config.factTables(name)
+}
+
+object TableRepo {
+  import org.apache.spark.sql.catalyst.expressions._
+  import org.apache.spark.sql.internal.SQLConf
+  import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+
+  private val integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
+
+  /** The year set `df`'s plan proves for `yearCol`, or None when it proves
+    * nothing. The proof is the plan's own constraints (the ones the
+    * optimizer infers filters from). The candidate set comes from `=`,
+    * `<=>`, `IN` and OR-of-equalities between the output year attribute
+    * and integer literals, intersected across constraints: `add_year`'s
+    * `lit(year)` gives each per-year build the constraint `Year <=> year`,
+    * and a union ORs its children's. Every constraint on the year alone
+    * (`Year > k`, `Year =!= k`, `NOT IN`, ...) is then evaluated at each
+    * candidate, and the candidates it rejects are dropped. A year
+    * constraint that cannot be evaluated, or a filter that constraint
+    * propagation cannot see (non-deterministic, or with a subquery),
+    * makes the plan prove nothing, so the probe runs.
+    *
+    * The analyzed plan is read, not the optimized one: optimization folds
+    * a projection over local rows into a new local relation, which drops
+    * the literal's constraint, and would cost a full optimizer pass per
+    * decorator besides. The proven set may still exceed the years present
+    * (a filter on another column, a join or a limit can empty a year); a
+    * per-year branch for an absent year matches no row.
+    */
+  def provenYears(df: DataFrame, yearCol: String = "Year"): Option[Seq[Int]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val plan = df.queryExecution.analyzed
+    val opaqueFilter = plan.exists {
+      case Filter(cond, _) => !cond.deterministic || SubqueryExpression.hasSubquery(cond)
+      case _               => false
+    }
+    plan.resolve(Seq(yearCol), SQLConf.get.resolver) match {
+      case Some(year: Attribute) if integral(year.dataType) && !opaqueFilter =>
+        def isYear(e: Expression) = e match {
+          case a: Attribute => a.exprId == year.exprId
+          case _            => false
+        }
+        def value(e: Expression): Option[Int] = e match {
+          case Literal(v: Number, t) if integral(t) && v.longValue.isValidInt => Some(v.intValue)
+          case _ => None
+        }
+        def years(c: Expression): Option[Set[Int]] = c match {
+          case EqualTo(a, l) if isYear(a)       => value(l).map(Set(_))
+          case EqualTo(l, a) if isYear(a)       => value(l).map(Set(_))
+          case EqualNullSafe(a, l) if isYear(a) => value(l).map(Set(_))
+          case EqualNullSafe(l, a) if isYear(a) => value(l).map(Set(_))
+          case In(a, list) if isYear(a) =>
+            val vs = list.map(value)
+            if (vs.forall(_.isDefined)) Some(vs.flatten.toSet) else None
+          case Or(l, r)  => for (a <- years(l); b <- years(r)) yield a ++ b
+          case And(l, r) => (years(l) ++ years(r)).reduceOption(_ & _)
+          case _         => None
+        }
+        def literal(y: Int): Literal = year.dataType match {
+          case ByteType  => Literal(y.toByte)
+          case ShortType => Literal(y.toShort)
+          case LongType  => Literal(y.toLong)
+          case _         => Literal(y)
+        }
+        // Some(holds) per candidate, None when the constraint cannot be evaluated
+        def holds(c: Expression, y: Int): Option[Boolean] =
+          try Some(c.transform { case a: Attribute if isYear(a) => literal(y) }.eval() == true)
+          catch { case scala.util.control.NonFatal(_) => None }
+        val constraints = plan.constraints.toSeq
+        val onYear = constraints.filter(_.references.forall(isYear))
+        constraints.flatMap(years).reduceOption(_ & _).flatMap { candidates =>
+          val checked = candidates.toSeq.sorted.map(y => y -> onYear.map(holds(_, y)))
+          if (checked.exists(_._2.contains(None))) None
+          else Some(checked.collect { case (y, hs) if hs.forall(_.contains(true)) => y })
+        }
+      case _ => None
+    }
+  }
+}
+
+/** The manifest of an A9 cache entry: the schema the entry was written
+  * with and, when the built plan proved it, its year set. It lives inside
+  * the entry directory under a `_`-prefixed name, which Spark's file index
+  * skips, and it is written after the data, so an entry without one is a
+  * miss.
+  */
+final case class CacheManifest(
+    schema: org.apache.spark.sql.types.StructType,
+    years: Option[Seq[Int]],
+)
+
+object CacheManifest {
+  private val FileName = "_graft_manifest.json"
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Through the Hadoop filesystem API — the cache directory may be
+    * HDFS/S3 at deployment scale, where a `java.io.File` probe is always
+    * false and would silently rewrite the cache on every load.
+    */
+  private def file(spark: SparkSession, entry: String) = {
+    val p = new org.apache.hadoop.fs.Path(entry, FileName)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  def write(spark: SparkSession, entry: String, m: CacheManifest): Unit = {
+    val node = mapper.createObjectNode()
+    node.set[com.fasterxml.jackson.databind.JsonNode]("schema", mapper.readTree(m.schema.json))
+    m.years.foreach(ys => ys.foldLeft(node.putArray("years"))(_.add(_)))
+    val (fs, p) = file(spark, entry)
+    val out = fs.create(p, true)
+    try out.write(mapper.writeValueAsBytes(node)) finally out.close()
+  }
+
+  /** None when the entry has no manifest (absent, or written by an older
+    * format): the caller rebuilds it.
+    */
+  def read(spark: SparkSession, entry: String): Option[CacheManifest] = {
+    val (fs, p) = file(spark, entry)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val node = try mapper.readTree(in) finally in.close()
+      val schema = org.apache.spark.sql.types.DataType.fromJson(node.get("schema").toString)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val years = Option(node.get("years")).map { ys =>
+        (0 until ys.size).map(ys.get(_).asInt)
+      }
+      Some(CacheManifest(schema, years))
+    }
+  }
 }

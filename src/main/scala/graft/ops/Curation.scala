@@ -254,7 +254,7 @@ object Curation {
     // aggregation that redistributes anyway, and per-token work is one
     // integer-sequence explode — the r18 scatter did not reproduce its
     // same-session win in the clean artifact (0.60→0.70s) and the r19
-    // min-of-5 A/B confirmed the revert (see OPTIMIZATION_r19.md)
+    // min-of-5 A/B confirmed the revert (commit 8c4e126)
     val tokRows = df.select(col(idCol),
       posexplode(TextOps.tokens(coalesce(col(textCol), lit("")))).as(Seq("_p", "_t")))
     // first/last chunk containing pos p (int arithmetic, lo clamped):

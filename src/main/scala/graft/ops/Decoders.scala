@@ -18,7 +18,10 @@ import org.apache.spark.sql.types._
   *      ranges (items side broadcast; predicate `code >= lo && code < hi`
   *      stays in whole-stage codegen);
   *   3. validate that no (Year, Code, level) maps to two items
-  *      (decoder.py:436-444 raises — we raise with a sample);
+  *      (decoder.py:436-444 raises — we raise with a sample) — only when
+  *      the compiled metadata lets two items claim one code
+  *      ([[rangesOverlap]]); otherwise no code can be ambiguous and the
+  *      check, its job and its cache are skipped;
   *   4. fold level -> columns (conditional-first agg; equivalent to the
   *      reference's unstack, decoder.py:431-433);
   *   5. broadcast-hash left join back onto the input by (Year, Code) and
@@ -159,6 +162,27 @@ object Classifier {
     }
   }
 
+  /** Whether the code ranges of two different items intersect within one
+    * (year, level) — the only way a code can decode to two items. Checked
+    * on the driver over the compiled metadata: each item's own ranges are
+    * merged first (overlapping them is legal), so any overlap left in the
+    * sorted sweep is between items. Stepped ranges count as their whole
+    * interval, which can only report an overlap more often.
+    */
+  private[ops] def rangesOverlap(items: Seq[ClassItem]): Boolean =
+    items.groupBy(i => (i.year, i.level)).values.exists { sameLevel =>
+      val merged = sameLevel.groupBy(_.key).values.toSeq.flatMap { sameItem =>
+        sameItem.flatMap(_.codes.ranges).filter(r => r.start < r.end)
+          .map(r => (r.start, r.end)).sortBy(_._1)
+          .foldLeft(List.empty[(Long, Long)]) {
+            case ((lo, hi) :: done, (s, e)) if s <= hi => (lo, hi max e) :: done
+            case (done, r) => r :: done
+          }
+      }.sortBy(_._1)
+      // the first overlap in start order is between neighbours
+      merged.zip(merged.drop(1)).exists { case ((_, hi), (s, _)) => s < hi }
+    }
+
   /** Add classification columns to `df`. Raises IllegalStateException when
     * an ambiguous mapping exists (reference parity, decoder.py:436-444).
     */
@@ -176,7 +200,8 @@ object Classifier {
     val spark = df.sparkSession
     val y = settings.yearCol
     val c = settings.codeCol
-    val its = itemsDF(spark, items.filter(i => settings.levels.contains(i.level)), settings.aspects)
+    val levelItems = items.filter(i => settings.levels.contains(i.level))
+    val its = itemsDF(spark, levelItems, settings.aspects)
 
     val codes = df.select(col(y).cast(IntegerType).as(y), col(c).cast(LongType).as(c))
       .where(col(c).isNotNull).distinct()
@@ -184,9 +209,12 @@ object Classifier {
     val joinCond = col(y) === col("_cls_year") &&
       col(c) >= col("_cls_lo") && col(c) < col("_cls_hi") &&
       (col("_cls_step") === lit(1L) || pmod(col(c) - col("_cls_lo"), col("_cls_step")) === lit(0L))
-    // persisted: consumed twice (eager uniqueness validation + pivot agg)
-    // and bounded by the distinct-code dictionary size
-    val matched = handle.persist(codes.join(broadcast(its), joinCond, "inner"))
+    val dictionary = codes.join(broadcast(its), joinCond, "inner")
+    val validate = rangesOverlap(levelItems)
+    // persisted only when validated: then it is consumed twice (eager
+    // uniqueness validation + pivot agg), bounded by the distinct-code
+    // dictionary size
+    val matched = if (validate) handle.persist(dictionary) else dictionary
 
     // Uniqueness validation: one ITEM per (Year, Code, level) — counted
     // as distinct item keys, not matched range rows, so an item whose
@@ -194,12 +222,14 @@ object Classifier {
     // singleton) is legal, exactly like the reference's item-level check
     // (decoder.py:436-444). Runs on the distinct-code dictionary
     // (small), not the fact table.
-    val dups = matched.groupBy(col(y), col(c), col("_cls_level"))
-      .agg(countDistinct(col("_cls_key")).as("_n_items"))
-      .where(col("_n_items") > 1).limit(10).collect()
-    if (dups.nonEmpty)
-      throw new IllegalStateException(
-        s"Classification is not valid — ambiguous (year, code, level): ${dups.mkString("; ")}")
+    if (validate) {
+      val dups = matched.groupBy(col(y), col(c), col("_cls_level"))
+        .agg(countDistinct(col("_cls_key")).as("_n_items"))
+        .where(col("_n_items") > 1).limit(10).collect()
+      if (dups.nonEmpty)
+        throw new IllegalStateException(
+          s"Classification is not valid — ambiguous (year, code, level): ${dups.mkString("; ")}")
+    }
 
     // level -> columns (the reference's unstack): conditional first per
     // requested (aspect, level); uniqueness above makes `first` exact.

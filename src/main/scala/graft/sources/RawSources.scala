@@ -186,7 +186,9 @@ object RawSources {
     * catalog, not the parquet footers, so a plain `spark.read.parquet`
     * over the same files silently loses the zero-exchange property. The
     * DDL re-registration pins (keys, numBuckets), which MUST match the
-    * writing call — they are the on-disk contract.
+    * writing call — they are the on-disk contract. A caller that knows
+    * the files' schema passes it; otherwise it is inferred, which costs a
+    * job.
     */
   def registerBucketed(
       spark: SparkSession,
@@ -194,12 +196,13 @@ object RawSources {
       path: String,
       keys: Seq[String],
       numBuckets: Int,
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
   ): DataFrame = {
     if (!spark.catalog.tableExists(table)) {
-      val schema = spark.read.parquet(path).schema
+      val s = schema.getOrElse(spark.read.parquet(path).schema)
       val cols = keys.map(k => s"`$k`").mkString(", ")
       spark.sql(
-        s"""CREATE TABLE `$table` (${schema.toDDL}) USING PARQUET
+        s"""CREATE TABLE `$table` (${s.toDDL}) USING PARQUET
            |CLUSTERED BY ($cols) SORTED BY ($cols) INTO $numBuckets BUCKETS
            |LOCATION '$path'""".stripMargin)
     }

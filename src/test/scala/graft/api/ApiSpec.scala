@@ -1,18 +1,117 @@
 package graft.api
 
 import graft.SparkSpec
-import graft.engine.HbsFixtures
+import graft.engine.{HbsFixtures, TableRepo}
 import graft.meta._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class ApiSpec extends SparkSpec {
   import HbsFixtures.{U1, U2, R1, R2}
 
-  private def api(): Api = {
+  private def api(cacheDir: Option[String] = None): Api = {
     import spark.implicits._
     val cpi = Seq(("Urban", 1400, 100.0), ("Rural", 1400, 50.0))
       .toDF("Urban_Rural", "Year", "CPI")
-    new Api(spark, HbsFixtures.repo(spark), cpi = Some(cpi))
+    new Api(spark, HbsFixtures.repo(spark, cacheDir), cpi = Some(cpi))
+  }
+
+  /** Every decorator that resolves per-year metadata, applied to
+    * `Expenditures` and `Total_Expenditure` frames; construction only.
+    */
+  private def decorate(a: Api, exp: DataFrame, tot: DataFrame): Seq[(String, DataFrame)] = Seq(
+    "select" -> a.select(tot, "Urban_Rural", "Rural"),
+    "addAttribute" -> a.addAttribute(tot, "Province"),
+    "addClassification" -> a.addClassification(exp, "Food_NonFood"),
+    "addWeight" -> a.addWeight(tot),
+    "averageTable" -> a.averageTable(tot, Seq("Gross_Expenditure"), Seq("Year")),
+    "adjustByEquivalenceScale" -> a.adjustByEquivalenceScale(tot, Seq("Gross_Expenditure")),
+    "addDecile" -> a.addDecile(tot),
+  )
+
+  private def outputs(decorated: Seq[(String, DataFrame)]): Seq[(String, Seq[String])] =
+    decorated.map { case (name, df) => name -> df.collect().map(_.toString).toSeq.sorted }
+
+  private val threeYears = Seq(1398, 1399, 1400)
+
+  for (cached <- Seq(false, true); years <- Seq(Seq(1400), threeYears)) {
+    val label = s"${if (cached) "cached" else "uncached"}, ${years.size} year(s)"
+    test(s"decorators launch no Spark job on repo frames ($label)") {
+      val dir = if (cached) Some(java.nio.file.Files.createTempDirectory("graft_api").toString) else None
+      val a = api(dir)
+      // in the cached case the first load writes the entries, the second reads them
+      if (cached) a.loadTable("Expenditures", years)
+      val exp = a.loadTable("Expenditures", years)
+      val tot = a.loadTable("Total_Expenditure", years)
+      var decorated: Seq[(String, DataFrame)] = Seq.empty
+      val jobs = countJobs { decorated = decorate(a, exp, tot) }
+      assert(jobs == 0, s"decorators ran $jobs jobs before the caller's action")
+      val out = outputs(decorated).toMap
+      // the fixture holds the same households every year
+      assert(out("averageTable") == years.map(y => s"[$y,4092.0]"))
+      assert(out("select").size == 2 * years.size)
+      assert(out("addDecile").size == 4 * years.size)
+    }
+  }
+
+  test("a locally built frame falls back to the year probe with the same output") {
+    val a = api()
+    val exp = a.loadTable("Expenditures", threeYears)
+    val tot = a.loadTable("Total_Expenditure", threeYears)
+    def local(df: DataFrame) = spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    val (localExp, localTot) = (local(exp), local(tot))
+    assert(TableRepo.provenYears(localTot).isEmpty)
+    assert(outputs(decorate(a, localExp, localTot)) == outputs(decorate(a, exp, tot)))
+  }
+
+  test("constraint propagation off: the probe runs and the output is identical") {
+    def run() = {
+      val a = api()
+      outputs(decorate(a, a.loadTable("Expenditures", threeYears),
+        a.loadTable("Total_Expenditure", threeYears)))
+    }
+    val proven = run()
+    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
+    try {
+      val a = api()
+      val tot = a.loadTable("Total_Expenditure", threeYears)
+      assert(TableRepo.provenYears(tot).isEmpty)
+      assert(countJobs(a.addWeight(tot)) > 0, "without constraints the years must come from a probe")
+      assert(run() == proven)
+    } finally spark.conf.unset("spark.sql.constraintPropagation.enabled")
+  }
+
+  test("a filter on Year narrows the years the decorators resolve") {
+    val a = api()
+    // no external weights source: 1395 (<= externalWeightsYearMax) has no weights
+    val tot = a.loadTable("Total_Expenditure", Seq(1395, 1399, 1400))
+    val want = outputs(decorate(a, a.loadTable("Expenditures", Seq(1399, 1400)),
+      a.loadTable("Total_Expenditure", Seq(1399, 1400))))
+    val exp = a.loadTable("Expenditures", Seq(1395, 1399, 1400))
+    for (keep <- Seq[DataFrame => DataFrame](
+      _.where(col("Year") > 1395),
+      _.where(col("Year") =!= 1395),
+      _.where(col("Year").between(1396, 1400)),
+      _.where(!col("Year").isin(1395)))) {
+      var decorated: Seq[(String, DataFrame)] = Seq.empty
+      val jobs = countJobs { decorated = decorate(a, keep(exp), keep(tot)) }
+      assert(jobs == 0, s"decorators ran $jobs jobs before the caller's action")
+      assert(outputs(decorated) == want)
+    }
+    intercept[IllegalStateException](a.addWeight(tot))
+  }
+
+  test("a null Year is a named error in adjustByEquivalenceScale and addDecile") {
+    import spark.implicits._
+    val a = api()
+    val df = Seq((Some(1400), U1, 4800.0), (None, U2, 7920.0))
+      .toDF("Year", "ID", "Gross_Expenditure")
+    val calls = Seq[DataFrame => DataFrame](
+      a.adjustByEquivalenceScale(_, Seq("Gross_Expenditure")), a.addDecile(_))
+    for (call <- calls) {
+      val e = intercept[IllegalArgumentException](call(df))
+      assert(e.getMessage.contains("null/non-numeric years"))
+    }
   }
 
   test("loadTable dispatches raw / cleaned / processed forms") {
@@ -78,7 +177,6 @@ instructions:
 
   test("addClassificationAuto detects commodity vs occupation (E3)") {
     import spark.implicits._
-    import graft.engine.{RepoConfig, TableRepo}
     val commodityDoc = Meta.fromYaml("""
 defaults:
   levels: [1]

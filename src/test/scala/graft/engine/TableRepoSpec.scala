@@ -1,10 +1,8 @@
 package graft.engine
 
+import graft.SparkSpec
 import graft.meta._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** End-to-end engine test over HBSIR-shaped fixtures (FIXTURES.md §2):
   * raw -> clean -> pipeline -> schema-DAG union -> weights -> decoders ->
@@ -12,17 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * shape of the reference's ISC test
   * (tests/test_package/package/test_by_examples.py:7-69).
   */
-class TableRepoSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .appName("TableRepoSpec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TableRepoSpec extends SparkSpec {
 
   import HbsFixtures.{U1, U2, R1, R2}
 
@@ -144,6 +132,61 @@ food:
     assert(again.count() == 6)
   }
 
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("A9 cache hit launches no job and keeps the year proof") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cache_hit").toString
+    val years = Seq(1398, 1399, 1400)
+    val built = repo(cacheDir = Some(dir)).table("Expenditures", years)
+    val want = rowsOf(built)
+    // the read-back after the write carries the year proof
+    assert(TableRepo.provenYears(built) == Some(years))
+    var hit: org.apache.spark.sql.DataFrame = null
+    // a NEW repo over the same directory, as a later session opens it
+    val jobs = countJobs { hit = repo(cacheDir = Some(dir)).table("Expenditures", years) }
+    assert(jobs == 0, s"a cache hit must read the manifest, not infer the schema ($jobs jobs)")
+    assert(TableRepo.provenYears(hit) == Some(years))
+    assert(rowsOf(hit) == want)
+  }
+
+  test("A9 entry without a manifest is a miss and is rebuilt") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cache_old").toString
+    val want = rowsOf(repo(cacheDir = Some(dir)).table("Expenditures", Seq(1400)))
+    val entry = new java.io.File(dir).listFiles().filter(_.getName.startsWith("Expenditures_1400_")).head
+    // replace the entry with other data and no manifest, as an entry of
+    // an older format or a write cut short would leave it
+    spark.range(3).toDF("bogus").write.mode("overwrite").parquet(entry.getPath)
+    assert(!new java.io.File(entry, "_graft_manifest.json").exists())
+    val rebuilt = repo(cacheDir = Some(dir)).table("Expenditures", Seq(1400))
+    assert(rowsOf(rebuilt) == want)
+    assert(new java.io.File(entry, "_graft_manifest.json").exists())
+  }
+
+  test("year proof: the plan proves a repo frame's years, not a local frame's") {
+    import spark.implicits._
+    val r = repo()
+    val years = Seq(1398, 1399, 1400)
+    val tot = r.table("Total_Expenditure", years)
+    assert(TableRepo.provenYears(tot) == Some(years))
+    // a filter on another column leaves the proof (a superset is safe)
+    assert(TableRepo.provenYears(tot.where(col("ID") === U1)) == Some(years))
+    // every filter on the year alone narrows it
+    assert(TableRepo.provenYears(tot.where(col("Year").isin(1399, 1400, 1401))) == Some(Seq(1399, 1400)))
+    assert(TableRepo.provenYears(tot.where(col("Year") =!= 1399)) == Some(Seq(1398, 1400)))
+    assert(TableRepo.provenYears(tot.where(col("Year") > 1398)) == Some(Seq(1399, 1400)))
+    assert(TableRepo.provenYears(tot.where(col("Year").between(1398, 1399))) == Some(Seq(1398, 1399)))
+    assert(TableRepo.provenYears(tot.where(!col("Year").isin(1398, 1400))) == Some(Seq(1399)))
+    assert(TableRepo.provenYears(tot.where(col("Year").cast("string") =!= "1400")) == Some(Seq(1398, 1399)))
+    assert(TableRepo.provenYears(tot.where(col("Year") > 1400)) == Some(Seq.empty))
+    // a filter constraint propagation cannot see leaves no proof
+    assert(TableRepo.provenYears(tot.where(col("Year") > rand() * 3000)).isEmpty)
+    // a locally built frame proves nothing; the probe reads the data
+    val local = Seq((1399, U1), (1400, U2), (1400, R1)).toDF("Year", "ID")
+    assert(TableRepo.provenYears(local).isEmpty)
+    assert(r.distinctYears(local) == Seq(1399, 1400))
+  }
+
   test("A9 cache with bucketed layout: cached loads read bucketed and skip shuffles") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val dir = java.nio.file.Files.createTempDirectory("graft_cache_bucketed").toString
@@ -169,7 +212,9 @@ food:
         .map(_.name).filter(_.startsWith("graft_cache_expenditures_1400"))
       assert(t.length == 1, s"expected one registered cache table, got ${t.toSeq}")
       spark.sql(s"DROP TABLE ${t.head}")
-      val recovered = r.table("Expenditures", Seq(1400))
+      var recovered: org.apache.spark.sql.DataFrame = null
+      val jobs = countJobs { recovered = r.table("Expenditures", Seq(1400)) }
+      assert(jobs == 0, s"re-attaching a bucketed entry must take its schema from the manifest ($jobs jobs)")
       assert(recovered.count() == 6)
       assert(exchanges(recovered.groupBy("ID").count()).isEmpty,
         "re-registered bucketed cache must keep the zero-shuffle property")

@@ -44,6 +44,69 @@ items:
     assert(out.length == 1 && out.head.getAs[String]("item_key_1") == "a")
   }
 
+  test("D1 metadata sweep flags only ranges of two items that intersect") {
+    def overlap(yaml: String) =
+      Classifier.rangesOverlap(Classifier.compile(Meta.fromYaml(yaml), Seq(1400), resolver = resolver))
+    assert(overlap("""
+items:
+  a: {level: 1, code: {start: 0, end: 100}}
+  b: {level: 1, code: {start: 50, end: 150}}
+"""))
+    // nested inside another item's range, after a third item
+    assert(overlap("""
+items:
+  a: {level: 1, code: {start: 0, end: 100}}
+  b: {level: 1, code: [{start: 20, end: 30}, {start: 200, end: 300}]}
+  c: {level: 1, code: {start: 150, end: 160}}
+"""))
+    // an item's own overlapping ranges, adjacent half-open ranges and
+    // different levels cannot make a code ambiguous
+    assert(!overlap("""
+items:
+  a: {level: 1, code: [{start: 0, end: 100}, 75, {start: 90, end: 120}]}
+  b: {level: 1, code: {start: 120, end: 150}}
+  c: {level: 2, code: {start: 0, end: 150}}
+"""))
+    // stepped ranges count as their whole interval: interleaved steps are
+    // reported, and the data check then finds no shared code
+    assert(overlap("""
+items:
+  even: {level: 1, code: {start: 0, end: 10, step: 2}}
+  odd: {level: 1, code: {start: 1, end: 10, step: 2}}
+"""))
+  }
+
+  test("D1 without overlapping ranges runs no check job and persists nothing") {
+    import spark.implicits._
+    val meta = Meta.fromYaml("""
+items:
+  low: {level: 1, code: {start: 0, end: 50}}
+  high: {level: 1, code: {start: 50, end: 100}}
+""")
+    val df = Seq((1400, 25L), (1400, 75L)).toDF("Year", "Code")
+    val items = Classifier.compile(meta, Seq(1400), resolver = resolver)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    var out: org.apache.spark.sql.DataFrame = null
+    assert(countJobs { out = Classifier.addClassification(df, items) } == 0)
+    val got = out.collect().map(r => r.getAs[Long]("Code") -> r.getAs[String]("item_key_1")).toMap
+    assert(got == Map(25L -> "low", 75L -> "high"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  test("D1 stepped ranges that interleave are checked and decode") {
+    import spark.implicits._
+    val meta = Meta.fromYaml("""
+items:
+  even: {level: 1, code: {start: 0, end: 10, step: 2}}
+  odd: {level: 1, code: {start: 1, end: 10, step: 2}}
+""")
+    val df = Seq((1400, 4L), (1400, 7L)).toDF("Year", "Code")
+    val items = Classifier.compile(meta, Seq(1400), resolver = resolver)
+    val got = Classifier.addClassification(df, items).collect()
+      .map(r => r.getAs[Long]("Code") -> r.getAs[String]("item_key_1")).toMap
+    assert(got == Map(4L -> "even", 7L -> "odd"))
+  }
+
   test("D1 non-overlapping levels pivot to separate columns") {
     import spark.implicits._
     val meta = Meta.fromYaml("""

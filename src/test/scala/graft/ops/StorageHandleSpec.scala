@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 class StorageHandleSpec extends SparkSpec {
 
@@ -14,21 +13,6 @@ class StorageHandleSpec extends SparkSpec {
       (3L, "completely different content about database engines and query optimization"),
       (4L, base),
     ).toDF("doc_id", "text")
-  }
-
-  private def countJobs(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      // listener events are delivered async; give the bus time to drain
-      // (500 ms is orders of magnitude beyond local delivery latency)
-      Thread.sleep(500)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("managed handle: minHashPairs construction runs no jobs, release drops every cache") {
